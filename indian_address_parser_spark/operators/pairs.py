@@ -5,7 +5,8 @@ the blocking key. AQE + skew-join handle residual partition skew; the
 quadratic-block problem is already handled upstream (secondary keys in
 ``blocking.with_block_key``). Mentions whose key carries no information
 (empty pincode AND city AND locality) are excluded — they would form one
-giant junk block.
+giant junk block. The columns carried are the caller's: the pipeline and
+the registry chain join the same way and differ only in their spec.
 """
 
 from __future__ import annotations
@@ -13,20 +14,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Raw address fields scoring consumes (digit signatures are derived from
-# the first five in blocking.with_block_key) — single source for both
-# projections below so adding a field cannot silently drop it from one.
-RAW_FIELDS = (
-    "house_no", "street", "locality", "city", "state", "pincode",
-    "block", "sector", "khasra",
-)
+from indian_address_parser_spark.operators.scoring import FIELD_WEIGHTS, spec_columns
+
+# Raw address fields the pipeline's spec scores (digit signatures are
+# derived from the guarded ones in blocking.with_block_key).
+RAW_FIELDS = tuple(f for f, _, _, _ in FIELD_WEIGHTS)
 
 # Fields each side carries into scoring (incl. precomputed digit signatures).
 # Keep this minimal — every column here is shuffled twice in the self-join.
-PAIR_FIELDS = RAW_FIELDS + (
-    "house_no_digits", "street_digits", "block_digits", "sector_digits",
-    "khasra_digits",
-)
+PAIR_FIELDS = spec_columns(FIELD_WEIGHTS)
 
 # Everything candidate_pairs consumes from the blocked frame. Checkpoint /
 # persist THIS projection, not the full mention payload: the wide columns
@@ -49,10 +45,14 @@ BLOCK_INPUT_COLS = ("mention_id", "normalized") + RAW_FIELDS
 
 
 def candidate_pairs(blocked: DataFrame) -> DataFrame:
-    """→ one row per unordered candidate pair with both sides' fields."""
+    """→ one row per unordered candidate pair: ``join_key`` plus ``{c}_a`` /
+    ``{c}_b`` for ``mention_id`` and every payload column of ``blocked``
+    (all but the block bookkeeping). Project the payload to a spec's
+    columns before persisting (``PAIR_INPUT_COLS`` for the pipeline's);
+    unread payload feeding ``score_pairs`` directly is pruned below the join."""
     usable = blocked.where(F.col("block_key") != "||")
 
-    cols = ["mention_id", "join_key", *PAIR_FIELDS]
+    cols = [c for c in blocked.columns if c not in ("block_key", "block_size")]
     left = usable.select([F.col(c).alias(f"{c}_a") for c in cols])
     right = usable.select([F.col(c).alias(f"{c}_b") for c in cols])
 

@@ -7,10 +7,14 @@ Stage graph (SURVEY.md §3.4):
         ─self-join→ pairs ─score→ edges   [ckpt 3, the big shuffle]
         ─large/small-star→ clusters       [ckpt 4, iterated]
 
-Each stage writes parquet plus a ``_manifest.json`` (stage name, input
-fingerprint, row count, per-partition counts). ``run_pipeline`` skips a
-stage when its manifest validates against the current input fingerprint —
-a rerun after a crash resumes mid-run without recomputation (north rule).
+Each stage writes parquet plus a ``_manifest.json`` (stage name, resume
+key, row count, per-partition counts, write time). The resume key is the
+manifest version, the input fingerprint, the stage's own parameters and
+the write time of the stage it reads. ``run_pipeline`` skips a stage when
+its manifest carries the current key — a rerun after a crash resumes
+mid-run without recomputation (north rule), while a rerun under other
+parameters recomputes that stage and, through the write time, every stage
+downstream of it.
 Counters come from ``df.observe`` where cheap and from the manifest rows
 otherwise; they are also the per-partition lineage record.
 
@@ -32,10 +36,14 @@ from indian_address_parser_spark.eval.pairwise import pairwise_scores
 from indian_address_parser_spark.operators.blocking import with_block_key
 from indian_address_parser_spark.operators.cc import attach_clusters, connected_components
 from indian_address_parser_spark.operators.extract import extract_mentions
-from indian_address_parser_spark.operators.pairs import candidate_pairs
-from indian_address_parser_spark.operators.scoring import DEFAULT_THRESHOLD, score_pairs
+from indian_address_parser_spark.operators.pairs import PAIR_INPUT_COLS, candidate_pairs
+from indian_address_parser_spark.operators.scoring import DEFAULT_THRESHOLD, FIELD_WEIGHTS, score_pairs
 
 STAGES = ("mentions", "blocked", "edges", "clusters")
+
+# Part of every resume key: bump when a stage's output schema or semantics
+# change, so manifests written by older code never resume.
+MANIFEST_VERSION = 2
 
 
 def _manifest_path(root: str, stage: str) -> str:
@@ -82,7 +90,7 @@ def _write_stage(
     df: DataFrame,
     root: str,
     stage: str,
-    input_fp: str,
+    key: dict,
     iceberg_prefix: str | None = None,
 ) -> DataFrame:
     """Write stage output + manifest; return the re-read DataFrame (so the
@@ -105,15 +113,15 @@ def _write_stage(
         )
         storage = {"format": "iceberg", "table": table,
                    "snapshot_id": snap[0][0] if snap else None}
-        return _finish_manifest(out, root, stage, input_fp, storage)
+        return _finish_manifest(out, root, stage, key, storage)
     path = os.path.join(root, stage)
     df.write.mode("overwrite").parquet(path)
     out = spark.read.parquet(path)
-    return _finish_manifest(out, root, stage, input_fp, storage)
+    return _finish_manifest(out, root, stage, key, storage)
 
 
 def _finish_manifest(
-    out: DataFrame, root: str, stage: str, input_fp: str, storage: dict
+    out: DataFrame, root: str, stage: str, key: dict, storage: dict
 ) -> DataFrame:
     per_part = (
         out.groupBy(F.spark_partition_id().alias("pid")).count().collect()
@@ -125,7 +133,7 @@ def _finish_manifest(
         counters = {k: (v if not hasattr(v, "item") else v.item()) for k, v in row.asDict().items()}
     manifest = {
         "stage": stage,
-        "input_fingerprint": input_fp,
+        "key": key,
         "rows": sum(r["count"] for r in per_part),
         "partitions": {str(r["pid"]): r["count"] for r in per_part},
         "counters": counters,
@@ -138,16 +146,16 @@ def _finish_manifest(
     return out
 
 
-def _stage_valid(root: str, stage: str, input_fp: str) -> bool:
-    mp = _manifest_path(root, stage)
-    if not os.path.exists(mp):
-        return False
+def _valid_manifest(root: str, stage: str, key: dict) -> dict | None:
+    """The stage's manifest if it was written under ``key``, else None."""
     try:
-        with open(mp) as f:
+        with open(_manifest_path(root, stage)) as f:
             manifest = json.load(f)
     except (OSError, json.JSONDecodeError):
-        return False
-    return manifest.get("stage") == stage and manifest.get("input_fingerprint") == input_fp
+        return None
+    if manifest.get("stage") != stage or manifest.get("key") != key:
+        return None
+    return manifest
 
 
 def _input_fingerprint(pages: DataFrame) -> str:
@@ -187,38 +195,47 @@ def run_pipeline(
     os.makedirs(work_dir, exist_ok=True)
     fp = _input_fingerprint(pages)
     report: dict = {"input_fingerprint": fp, "stages": {}, "resumed": []}
+    upstream = None  # write time of the last stage run or resumed
 
-    def stage(name: str, build):
-        path = os.path.join(work_dir, name)
-        if resume and _stage_valid(work_dir, name, fp):
+    def stage(name: str, params: dict, build):
+        nonlocal upstream
+        key = {"version": MANIFEST_VERSION, "input_fingerprint": fp,
+               "params": params, "upstream": upstream}
+        key = json.loads(json.dumps(key))  # compare equal to the stored form
+        manifest = _valid_manifest(work_dir, name, key) if resume else None
+        if manifest is not None:
             report["resumed"].append(name)
-            with open(_manifest_path(work_dir, name)) as f:
-                manifest = json.load(f)
             report["stages"][name] = manifest
+            upstream = manifest["written_at"]
             storage = manifest.get("storage", {})
             if storage.get("format") == "iceberg":  # pragma: no cover - needs jar
                 return spark.read.table(storage["table"])
-            return spark.read.parquet(path)
+            return spark.read.parquet(os.path.join(work_dir, name))
         t0 = time.perf_counter()
-        out = _write_stage(build(), work_dir, name, fp, iceberg_prefix)
+        out = _write_stage(build(), work_dir, name, key, iceberg_prefix)
         with open(_manifest_path(work_dir, name)) as f:
             report["stages"][name] = json.load(f)
         report["stages"][name]["seconds"] = time.perf_counter() - t0
+        upstream = report["stages"][name]["written_at"]
         return out
 
-    mentions = stage("mentions", lambda: extract_mentions(pages))
+    mentions = stage("mentions", {}, lambda: extract_mentions(pages))
     # checkpoint only the projection the pair join reads — the wide mention
     # payload (url, normalized text) is re-joined from the mentions stage
     # where needed and would otherwise dominate this stage's write volume
-    from indian_address_parser_spark.operators.pairs import PAIR_INPUT_COLS
-
     blocked = stage(
         "blocked",
+        {"max_block_size": max_block_size},
         lambda: with_block_key(mentions, max_block_size).select(*PAIR_INPUT_COLS),
     )
-    edges = stage("edges", lambda: score_pairs(candidate_pairs(blocked), threshold))
+    edges = stage(
+        "edges",
+        {"threshold": threshold, "spec": FIELD_WEIGHTS},
+        lambda: score_pairs(candidate_pairs(blocked), threshold),
+    )
     clusters = stage(
         "clusters",
+        {"cc_stars": cc_stars},
         lambda: attach_clusters(
             mentions.select("mention_id", "url", "normalized"),
             connected_components(

@@ -12,9 +12,12 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def _warm_python_workers(spark) -> None:
@@ -75,8 +78,8 @@ def _warm_python_workers(spark) -> None:
         attach_clusters(
             mentions.select("mention_id"), connected_components(edges)
         ).count()
-    except Exception:
-        pass  # warmup is best-effort
+    except Exception as exc:  # warmup is best-effort, but never silent
+        _log.warning("session warm-up: micro ER chain failed: %r", exc, exc_info=True)
 
 
 def get_spark(
@@ -164,6 +167,6 @@ def get_spark(
     if warm_workers:
         try:
             _warm_python_workers(spark)
-        except Exception:
-            pass  # warmup is best-effort; never fail session construction
+        except Exception as exc:  # never fail session construction
+            _log.warning("session warm-up failed: %r", exc, exc_info=True)
     return spark

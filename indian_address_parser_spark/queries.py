@@ -156,14 +156,6 @@ def q_er_synth_addr(spark, sf_dir):
     return _with_addr(spark, sf_dir)
 
 
-def q_er_normalize(spark, sf_dir):
-    from indian_address_parser_spark.functions.udfs import normalize_udf
-
-    return _with_addr(spark, sf_dir).select(
-        "doc_id", normalize_udf(F.col("addr")).alias("normalized")
-    )
-
-
 def _norm_fields(spark, sf_dir) -> DataFrame:
     """doc_id, normalized + extracted fields — shared by several queries."""
     from indian_address_parser_spark.functions.udfs import normalize_udf
@@ -185,6 +177,10 @@ def _norm_fields(spark, sf_dir) -> DataFrame:
     )
 
 
+def q_er_normalize(spark, sf_dir):
+    return _norm_fields(spark, sf_dir).select("doc_id", "normalized")
+
+
 def q_er_extract_fields(spark, sf_dir):
     return _norm_fields(spark, sf_dir)
 
@@ -197,78 +193,56 @@ def q_er_block_key(spark, sf_dir):
     )
 
 
-def _blocked(spark, sf_dir) -> DataFrame:
-    f = _norm_fields(spark, sf_dir)
-    return f.withColumn("block_key", F.concat_ws("|", "pincode", "city"))
+# The registry chain's scoring spec (operators/scoring.py): the oracle's
+# fixed formula. Its fields are '' (regexp_extract), never NULL, so the
+# scorer's null-aware renormalization always divides by the weight sum.
+REGISTRY_FIELDS = (
+    ("house_no", 0.4, "jw", False),
+    ("street", 0.3, "jw", False),
+    ("city", 0.2, "lev", False),
+    ("pincode", 0.1, "eq", False),
+)
 
 
-def q_er_block_sizes(spark, sf_dir):
-    return (
-        _blocked(spark, sf_dir)
-        .groupBy("block_key")
-        .agg(F.count("*").alias("n"))
-    )
+def _registry_pairs(spark, sf_dir) -> DataFrame:
+    """Registry candidate pairs on the oracle's ``pincode|city`` key (never
+    sub-split), through the shared pair join. One eager checkpoint of the
+    narrow blocked frame stops the self-join re-running the normalize-UDF
+    + field-extraction subtree once per side (OPTIMIZATION_r06.md)."""
+    from indian_address_parser_spark.operators.pairs import candidate_pairs
+    from indian_address_parser_spark.operators.scoring import spec_columns
+
+    b = _norm_fields(spark, sf_dir).select(
+        F.col("doc_id").alias("mention_id"),
+        F.concat_ws("|", "pincode", "city").alias("block_key"),
+        *spec_columns(REGISTRY_FIELDS),
+    ).localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
+    return candidate_pairs(b.withColumn("join_key", F.col("block_key")))
 
 
 def q_er_candidate_pairs(spark, sf_dir):
-    # r6: same §2.4 fix as _scored_pairs — the self-join otherwise runs the
-    # normalize-UDF + field-extraction subtree once per side; checkpoint the
-    # 2-column blocked frame once and let both branches read the cache.
-    b = _blocked(spark, sf_dir).select("doc_id", "block_key").localCheckpoint(
-        eager=True, storageLevel=_CKPT_LEVEL
+    return _registry_pairs(spark, sf_dir).select(
+        F.col("mention_id_a").alias("id_a"),
+        F.col("mention_id_b").alias("id_b"),
+        F.col("join_key").alias("block_key"),
     )
-    a = b.select(F.col("doc_id").alias("id_a"), "block_key")
-    c = b.select(F.col("doc_id").alias("id_b"), F.col("block_key").alias("bk"))
-    return a.join(
-        c, (F.col("block_key") == F.col("bk")) & (F.col("id_a") < F.col("id_b"))
-    ).select("id_a", "id_b", "block_key")
-
-
-def _scored_pairs(spark, sf_dir) -> DataFrame:
-    from indian_address_parser_spark.functions.udfs import jaro_winkler_udf
-
-    # r6: the self-join otherwise re-executes the normalize-UDF +
-    # field-extraction subtree once per side (guide §2.4); one eager
-    # checkpoint of the 5-column blocked frame shares it.
-    b = _blocked(spark, sf_dir).select(
-        "doc_id", "block_key", "house_no", "street", "city", "pincode"
-    ).localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
-    cols = ["house_no", "street", "city", "pincode"]
-    a = b.select(F.col("doc_id").alias("id_a"), "block_key", *[F.col(c).alias(c + "_a") for c in cols])
-    c = b.select(F.col("doc_id").alias("id_b"), F.col("block_key").alias("bk"), *[F.col(c).alias(c + "_b") for c in cols])
-    p = a.join(c, (F.col("block_key") == F.col("bk")) & (F.col("id_a") < F.col("id_b")))
-    # r6: narrow projection + round-robin fan-out BEFORE the Arrow JW
-    # kernel — the block join's AQE-coalesced output otherwise runs the
-    # Python UDF on 1-2 tasks (measured ~7 s serial for the 880k-pair
-    # JW pass at sf0.1; fanned out it is sub-second). Same lesson, same
-    # shape as operators/scoring.py's documented narrow exchange.
-    p = p.select(
-        "id_a", "id_b", *[F.col(f"{c}_{s}") for c in cols for s in ("a", "b")]
-    ).repartition(p.sparkSession.sparkContext.defaultParallelism)
-
-    def lev_sim(x, y):
-        ml = F.greatest(F.length(x), F.length(y))
-        return F.when(ml == 0, F.lit(1.0)).otherwise(1.0 - F.levenshtein(x, y) / ml.cast("double"))
-
-    score = (
-        0.4 * jaro_winkler_udf(F.col("house_no_a"), F.col("house_no_b"))
-        + 0.3 * jaro_winkler_udf(F.col("street_a"), F.col("street_b"))
-        + 0.2 * lev_sim(F.col("city_a"), F.col("city_b"))
-        + 0.1 * F.when(F.col("pincode_a") == F.col("pincode_b"), 1.0).otherwise(0.0)
-    )
-    return p.select("id_a", "id_b", F.round(score, 6).alias("score"))
 
 
 def q_er_pair_scores(spark, sf_dir):
-    return _scored_pairs(spark, sf_dir)
+    from indian_address_parser_spark.operators.scoring import score_pairs
+
+    # threshold 0.0 keeps every pair: registry scores are never negative
+    edges = score_pairs(_registry_pairs(spark, sf_dir), spec=REGISTRY_FIELDS, threshold=0.0)
+    return edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"), "score")
 
 
 def q_er_edges(spark, sf_dir):
-    return _scored_pairs(spark, sf_dir).where(F.col("score") >= SCORE_THRESHOLD)
+    # the oracle filters the ROUNDED score
+    return q_er_pair_scores(spark, sf_dir).where(F.col("score") >= SCORE_THRESHOLD)
 
 
 def q_er_clusters(spark, sf_dir):
-    from indian_address_parser_spark.operators.cc import connected_components
+    from indian_address_parser_spark.operators.cc import attach_clusters, connected_components
 
     # zero-pad ids: CC compares lexicographically, the oracle numerically
     pad = lambda c: F.lpad(c.cast("string"), 12, "0")  # noqa: E731
@@ -277,11 +251,10 @@ def q_er_clusters(spark, sf_dir):
         pad(F.col("id_b")).alias("dst"),
     )
     nodes = _docs(spark, sf_dir).select(pad(F.col("doc_id")).alias("mention_id"))
-    asn = connected_components(edges)
-    out = nodes.join(asn, "mention_id", "left")
+    out = attach_clusters(nodes, connected_components(edges))
     return out.select(
         F.col("mention_id").cast("bigint").alias("doc_id"),
-        F.coalesce(F.col("cluster_id"), F.col("mention_id")).cast("bigint").alias("cluster_id"),
+        F.col("cluster_id").cast("bigint").alias("cluster_id"),
     )
 
 
@@ -2661,7 +2634,6 @@ def oracle_sqls(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
 # key remains implemented, pytest-covered, and strictly dominated by a
 # registered successor:
 #   er_synth_addr            -> fixture echo; er_normalize hashes the same rows
-#   er_block_sizes           -> GROUP BY projection of the hash-oracled er_block_key
 #   dedup_minhash_signatures -> subsumed by dedup_minhash128_band_pairs
 #   dedup_minhash_band_pairs -> 32-perm teaching variant of the 128-perm entry
 #   dedup_ngram_jaccard      -> no DF cap; _dfcap is the production shape

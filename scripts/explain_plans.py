@@ -88,20 +88,16 @@ def main() -> None:
         must_not=("BatchEvalPython",),
     )
 
-    # JVM-only contract when no JW field is configured: zero Python nodes
-    from indian_address_parser_spark.operators import scoring as scoring_mod
+    # JVM-only contract when the spec has no JW field: zero Python nodes
+    from indian_address_parser_spark.operators.scoring import FIELD_WEIGHTS
 
-    orig = scoring_mod.FIELD_WEIGHTS
-    scoring_mod.FIELD_WEIGHTS = tuple((f, w, g, False) for f, w, g, _ in orig)
-    try:
-        capture(
-            "scoring with Levenshtein-only field table (JVM-only contract)",
-            score_pairs(candidate_pairs(blocked)),
-            must_contain=("Join Inner", "AdaptiveSparkPlan"),
-            must_not=("ArrowEvalPython", "BatchEvalPython", "RoundRobinPartitioning"),
-        )
-    finally:
-        scoring_mod.FIELD_WEIGHTS = orig
+    lev_only = tuple((f, w, "lev", g) for f, w, _, g in FIELD_WEIGHTS)
+    capture(
+        "scoring with Levenshtein-only field spec (JVM-only contract)",
+        score_pairs(candidate_pairs(blocked), spec=lev_only),
+        must_contain=("Join Inner", "AdaptiveSparkPlan"),
+        must_not=("ArrowEvalPython", "BatchEvalPython", "RoundRobinPartitioning"),
+    )
 
     # r4 contracts -------------------------------------------------------
     sf = "/root/testdata/sf0.001"

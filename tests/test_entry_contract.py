@@ -42,7 +42,9 @@ class TestOracleParity:
     SUBSET = [
         "er_normalize",
         "er_extract_fields",
+        "er_candidate_pairs",
         "er_pair_scores",
+        "er_edges",
         "er_clusters",
         "dedup_minhash128_band_pairs",
         "sim_cosine_topk",

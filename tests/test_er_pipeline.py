@@ -132,6 +132,33 @@ class TestPipeline:
         third = run_pipeline(spark, fixture["pages"], wd)
         assert third["resumed"] == list(("mentions", "blocked", "edges", "clusters"))
 
+    def test_resume_keys_on_threshold(self, spark, fixture, tmp_path):
+        """A rerun under another threshold must not resume the old edges."""
+        wd = str(tmp_path / "rethreshold")
+        loose = run_pipeline(spark, fixture["pages"], wd, threshold=0.80)
+        rerun = run_pipeline(spark, fixture["pages"], wd, threshold=0.99)
+        fresh = run_pipeline(spark, fixture["pages"], str(tmp_path / "fresh"), threshold=0.99)
+        assert rerun["resumed"] == ["mentions", "blocked"]
+        edges = lambda r: r["stages"]["edges"]["rows"]  # noqa: E731
+        assert edges(rerun) == edges(fresh) < edges(loose)
+
+    def test_recomputed_stage_recomputes_downstream(self, spark, fixture, tmp_path):
+        wd = str(tmp_path / "cascade")
+        run_pipeline(spark, fixture["pages"], wd)
+        os.remove(os.path.join(wd, "blocked", "_manifest.json"))
+        again = run_pipeline(spark, fixture["pages"], wd)
+        assert again["resumed"] == ["mentions"]
+        # a manifest written under another code version never resumes
+        path = os.path.join(wd, "clusters", "_manifest.json")
+        with open(path) as f:
+            m = json.load(f)
+        m["key"]["version"] -= 1
+        with open(path, "w") as f:
+            json.dump(m, f)
+        assert run_pipeline(spark, fixture["pages"], wd)["resumed"] == [
+            "mentions", "blocked", "edges"
+        ]
+
     def test_manifests_record_partitions(self, spark, fixture, tmp_path):
         wd = str(tmp_path / "manifest")
         run_pipeline(spark, fixture["pages"], wd)
@@ -140,6 +167,81 @@ class TestPipeline:
                 m = json.load(f)
             assert m["rows"] == sum(m["partitions"].values())
             assert m["rows"] > 0
+
+
+class TestFieldSpecScorer:
+    """score_pairs on literal pair rows under a small spec."""
+
+    SPEC = (
+        ("h", 0.5, "jw", True),
+        ("c", 0.3, "lev", False),
+        ("p", 0.2, "eq", False),
+    )
+    # (id_a, id_b, h_a, h_b, c_a, c_b, p_a, p_b, expected score)
+    ROWS = [
+        ("1", "2", "HNO 12", "H NO 12", "DELHI", "DELHI", "1", "1", 0.5 * 0.907143 + 0.5),
+        ("3", "4", "HNO 12", "HNO 12", "DELHI", "DELHY", "1", "1", 0.5 + 0.3 * 0.8 + 0.2),
+        ("5", "6", "HNO 12", "HNO 12", "DELHI", "DELHI", "1", "2", 0.8),
+        ("7", "8", "HNO 12", "HNO 12", None, "DELHI", "1", "2", 0.5 / 0.7),
+        ("9", "10", "HNO 45", "HNO 46", "DELHI", "DELHI", "1", "1", 0.5),
+        ("11", "12", None, "HNO 46", "DELHI", "DELHI", "1", "1", 1.0),
+    ]
+
+    @pytest.fixture(scope="class")
+    def pairs(self, spark):
+        digits = lambda v: None if v is None else "".join(ch for ch in v if ch.isdigit())  # noqa: E731
+        rows = [
+            (a, b, ha, hb, digits(ha), digits(hb), ca, cb, pa, pb)
+            for a, b, ha, hb, ca, cb, pa, pb, _ in self.ROWS
+        ]
+        cols = ("mention_id_a mention_id_b h_a h_b h_digits_a h_digits_b "
+                "c_a c_b p_a p_b").split()
+        return spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+
+    def _scores(self, pairs, threshold):
+        out = score_pairs(pairs, threshold=threshold, spec=self.SPEC).collect()
+        return {r["src"]: r["score"] for r in out}
+
+    def test_each_similarity_null_renorm_and_digit_guard(self, pairs):
+        got = self._scores(pairs, 0.0)
+        want = {r[0]: r[-1] for r in self.ROWS}
+        assert got.keys() == want.keys()
+        for k, v in want.items():
+            assert got[k] == pytest.approx(v, abs=2e-6), k
+
+    def test_ceiling_prune_drops_only_unreachable_pairs(self, pairs):
+        everything = self._scores(pairs, 0.0)
+        # the h digit guard caps a mismatching pair at (1 - 0.5) / 1 = 0.5
+        for t in (0.45, 0.5, 0.55, 0.79, 0.9):
+            assert self._scores(pairs, t) == {
+                k: v for k, v in everything.items() if v >= t
+            }, t
+
+        def pruned(t):
+            plan = score_pairs(pairs, threshold=t, spec=self.SPEC)._jdf.queryExecution()
+            return any(
+                "Filter" in line and "h_digits_a" in line
+                for line in plan.optimizedPlan().toString().splitlines()
+            )
+
+        assert pruned(0.55) and not pruned(0.45)
+
+
+class TestSessionWarmup:
+    def test_warmup_failures_are_logged_not_raised(self, spark, monkeypatch, caplog):
+        from indian_address_parser_spark.plans import session
+        from indian_address_parser_spark.sources import pages
+
+        def boom(*a, **k):
+            raise RuntimeError("fixture unavailable")
+
+        monkeypatch.setattr(pages, "generate", boom)
+        session._warm_python_workers(spark)  # the micro ER chain fails inside
+        monkeypatch.setattr(session, "_warm_python_workers", boom)
+        again = session.get_spark(app_name="iaps-tests", shuffle_partitions=8, warm_workers=True)
+        assert again is spark
+        warned = [r.getMessage() for r in caplog.records if r.name == session.__name__]
+        assert len(warned) == 2 and all("RuntimeError" in m for m in warned), warned
 
 
 class TestSkewHandling:
